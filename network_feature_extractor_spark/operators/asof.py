@@ -6,30 +6,32 @@ reads flow state built strictly from *prior* packets,
 latest right row whose timestamp is strictly earlier (``strict=True``) or
 earlier-or-equal (``strict=False``). Strict mode is the zero-temporal-
 leakage guarantee: a snapshot taken at exactly a turn's timestamp is NOT
-visible to that turn.
+visible to that turn. Each value column fills per column: a later right
+row with a null field does not erase an earlier non-null value.
 
-Spark has no native ASOF JOIN. We build it as a **sort-merge as-of in one
-shuffle** via the union trick:
+Spark has no native ASOF JOIN. Both entry points run one physical form,
+``_asof_core``, a sort-merge as-of built on the union trick:
 
-    union(left tagged k_l, right tagged k_r)
-      -> Window.partitionBy(key).orderBy(ts, kind, seq)
-      -> last(right_cols, ignorenulls=True) over unbounded-preceding
-      -> filter back to left rows
+    right rows -> per-key fill states (``_right_fill_states``)
+    union(left tagged k_l, states tagged k_r)
+      -> Window.partitionBy(parts).orderBy(_ets, _k)
+      -> last(_state, ignorenulls=True) over unbounded-preceding
+      -> keep the left rows, project the _f.<col> fields
 
 The tag ordering encodes strictness: strict => left rows sort *before*
 right rows at equal ts, so the running ``last()`` cannot see an equal-ts
-snapshot. This compiles to a single Exchange(hashpartition(key)) + Sort +
-WindowExec — exactly the "sort-merge as-of join over range-partitioned
-(conv_id, ts) sorted partitions" the north rule asks for, with zero
+snapshot. One running ``last`` serves every attached column, and left
+rows carry a single nullable struct slot through the big exchange instead
+of one null slot per value column. The plan is two exchanges: a small
+one for the right-side fold and the big union window's, with zero
 per-row Python.
 
 Skew: a window partition is one conv_id; a pathologically hot
 conversation (10^8 turns at 10^12 scale) serializes on one task. AQE
 splits skewed *joins* but not window partitions, so ``asof_join_salted``
-breaks hot conversations into time blocks: per-block carry-in state is
-precomputed by a tiny block-level cumulative window, then each block
-windows independently under partition key (conv_id, block). Equivalence
-with the direct path is property-tested (tests/test_asof.py).
+splits hot conversations into time blocks and runs the same core with
+parts = (conv_id, block). Equivalence with the direct path is tested in
+tests/test_asof.py.
 """
 
 from __future__ import annotations
@@ -44,35 +46,36 @@ def _right_fill_states(
     right_tagged: DataFrame,
     key: str,
     value_cols: list[str],
-    extra_part_cols: list[str] | None = None,
+    blocks: list[str],
 ) -> DataFrame:
     """Fold tagged right-side rows into per-row *fill states*.
 
-    Input columns: ``key`` (+ ``extra_part_cols``), ``_ets``, ``_k``,
-    ``_ats`` (attach timestamp carried by the row) and ``value_cols``.
-    Output: one row per (key[, extra], _ets, _k) carrying a single
-    ``_state`` struct = the per-column last-non-null fold of every right
-    row up to and including that position (window order ``_ets, _k,
-    struct(value_cols)`` — the engine's equal-ts tie-break convention).
+    Input columns: ``key``, ``blocks`` (``[]`` or ``["_blk"]``), ``_ets``,
+    ``_k``, ``_ats`` (attach timestamp carried by the row) and
+    ``value_cols``. Output: one row per (key, blocks, _ets, _k) carrying a
+    single ``_state`` struct = the per-column last-non-null fold of every
+    right row up to and including that position, in window order
+    ``blocks, _ets, _k, struct(value_cols)`` (the engine's equal-ts
+    tie-break convention). So ``state(R).c`` is the last non-null ``c``
+    over the rights <= R, null before any non-null: exactly
+    ``LAST_VALUE(c IGNORE NULLS)``, the oracle form.
 
-    Why: the big union window downstream then needs ONE running
-    ``last(_state)`` instead of one running last per value column, and
-    left rows carry a single nullable struct slot through the exchange
-    instead of |value_cols| fixed-width null slots (guide §2.3 "shuffle
-    fewer bytes" + §8 "decide with small rows"). Per-column semantics
-    are preserved exactly: state(R).c == last non-null c over rights
-    <= R, so last(_state).c at any left row equals the old per-column
-    ``last(c, ignorenulls)`` — including nulls before any non-null.
+    The fold partitions by ``key`` alone, also on the salted path: the
+    right side is one row per closed session, so even a hot key's fold
+    partition is small. Block ids rise with ``_ets``, so ordering by them
+    first keeps the right rows in ``_ets`` order and places each carry-in
+    row (``_ets = -inf``, ``_k = -1``) right after the last right row of
+    the earlier blocks.
     """
-    parts = [key, *(extra_part_cols or [])]
     ord_struct = F.struct(*[F.col(c) for c in value_cols])
     rw = (
-        Window.partitionBy(*parts)
-        .orderBy("_ets", "_k", ord_struct)
+        Window.partitionBy(key)
+        .orderBy(*blocks, "_ets", "_k", ord_struct)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     folded = right_tagged.select(
-        *parts,
+        key,
+        *blocks,
         "_ets",
         "_k",
         ord_struct.alias("_ord"),
@@ -84,22 +87,83 @@ def _right_fill_states(
             ],
         ).alias("_st"),
     )
-    # one state per (key, ts, tag): the max-_ord row is LAST in window
-    # order among equal-ts rows, so its state folds all of them. The
-    # groupBy reuses the fold window's HashPartitioning(key) — no new
+    # one state per (key, blocks, ts, tag): the max-_ord row is LAST in
+    # window order among equal-ts rows, so its state folds all of them.
+    # The groupBy reuses the fold window's HashPartitioning(key): no new
     # exchange (subset rule).
-    return folded.groupBy(*parts, "_ets", "_k").agg(
+    return folded.groupBy(key, *blocks, "_ets", "_k").agg(
         F.max(F.struct(F.col("_ord"), F.col("_st"))).getField("_st").alias("_state")
     )
 
 
-# minimum value-column count for the folded-state form: the fold adds
-# two small stages (right-side window + reduce), worthwhile only when it
-# removes several running lasts + several per-row null slots from the
-# big union exchange. Measured crossover (sf1.0, 32 cores): 1-2 columns
-# lose ~0.3-0.9 s to the extra stages; the 40-column pipeline attach
-# gains multiples of that.
-_FOLD_MIN_COLS = 4
+def _asof_core(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    left_cols: list[str],
+    value_cols: list[str],
+    strict: bool,
+    attach_ts_as: str,
+    carry: DataFrame | None = None,
+) -> DataFrame:
+    """The one as-of form behind both entry points.
+
+    ``left``: the caller's left columns plus ``_ets`` (epoch seconds).
+    ``right``: ``key``, ``_ets``, ``_ats`` and ``value_cols``. With
+    ``carry`` = (key, _blk) rows, one per hot left block, both sides also
+    hold ``_blk`` and the window partitions by (key, _blk). Each carry-in
+    row goes through the fold with null values, so its ``_state`` is the
+    whole state of the latest right row in an earlier block; it sorts
+    first in its block and is never split back into per-column aliases.
+    """
+    lk, rk = (0, 1) if strict else (1, 0)
+    r_tag = right.withColumn("_k", F.lit(rk))
+    blocks = []
+    if carry is not None:
+        blocks = ["_blk"]
+        r_tag = r_tag.unionByName(
+            carry.select(
+                key,
+                "_blk",
+                F.lit(float("-inf")).alias("_ets"),
+                F.lit(-1).alias("_k"),
+            ),
+            allowMissingColumns=True,
+        )
+    states = _right_fill_states(r_tag, key, value_cols, blocks)
+    u = left.withColumn("_k", F.lit(lk)).unionByName(
+        states, allowMissingColumns=True
+    )
+    w = (
+        Window.partitionBy(key, *blocks)
+        .orderBy("_ets", "_k")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    filled = u.select(
+        "*", F.last("_state", ignorenulls=True).over(w).alias("_f")
+    )
+    return filled.filter(F.col("_k") == lk).select(
+        *left_cols,
+        *[F.col(f"_f.{c}").alias(c) for c in value_cols],
+        F.col("_f._ts").alias(attach_ts_as),
+    )
+
+
+def _value_cols(left, right, key, right_ts, value_cols) -> list[str]:
+    value_cols = value_cols or [
+        c for c in right.columns if c not in (key, right_ts)
+    ]
+    overlap = set(value_cols) & set(left.columns)
+    if overlap:
+        raise ValueError(f"value columns collide with left columns: {overlap}")
+    return value_cols
+
+
+def _right_rows(right: DataFrame, key: str, right_ts: str, value_cols) -> DataFrame:
+    rts = epoch_seconds(F.col(right_ts))
+    return right.select(
+        key, rts.alias("_ets"), rts.alias("_ats"), *[F.col(c) for c in value_cols]
+    )
 
 
 def asof_join(
@@ -111,109 +175,21 @@ def asof_join(
     value_cols: list[str] | None = None,
     strict: bool = True,
     attach_ts_as: str = "asof_ts",
-    fold_states: bool | None = None,
 ) -> DataFrame:
     """Attach the latest-preceding right-row values to each left row.
 
     Left rows with no preceding right row get nulls (leading-null case).
-    Right values come back under their own names; the matched snapshot
-    timestamp (epoch seconds, double) under ``attach_ts_as``.
-
-    Two physical forms, same results (differentially tested):
-
-    - per-column (``fold_states=False``): the classic union window with
-      one running ``last(c, ignorenulls)`` per value column — fewest
-      stages, right for narrow attaches (1-3 columns).
-    - folded (``fold_states=True``, r8): the right side is first folded
-      into per-row fill states (`_right_fill_states` — a window +
-      groupBy over the SMALL side only), then the big union window runs
-      ONE ``last(_state)``, its sort key is plain ``(_ets, _k)`` with no
-      |value_cols|-field struct comparator, and left rows carry a single
-      nullable struct slot through the big exchange instead of one
-      fixed-width null slot per value column (~8 B x |value_cols| x
-      |left| shuffle+sort bytes saved — the pipeline's 40-column attach
-      saves ~320 B/row). Per-column ``LAST_VALUE(c IGNORE NULLS)``
-      semantics (the oracle form) are preserved exactly.
-
-    ``fold_states=None`` picks the folded form iff len(value_cols) >=
-    ``_FOLD_MIN_COLS``.
+    Right values come back under their own names, each filled per column;
+    the matched snapshot timestamp (epoch seconds, double) under
+    ``attach_ts_as``. Runs ``_asof_core`` with one window partition per
+    key: two exchanges, one running ``last(_state)``.
     """
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (key, right_ts)
-    ]
-    overlap = set(value_cols) & set(left.columns)
-    if overlap:
-        raise ValueError(f"value columns collide with left columns: {overlap}")
-    if fold_states is None:
-        fold_states = len(value_cols) >= _FOLD_MIN_COLS
-
-    lk, rk = (0, 1) if strict else (1, 0)
-
-    if not fold_states:
-        l_tag = (
-            left.withColumn("_k", F.lit(lk))
-            .withColumn("_ets", epoch_seconds(left_ts))
-            .withColumn(attach_ts_as, F.lit(None).cast("double"))
-        )
-        r_tag = (
-            right.withColumnRenamed(right_ts, "_rts")
-            .withColumn("_k", F.lit(rk))
-            .withColumn("_ets", epoch_seconds(F.col("_rts")))
-            .withColumn(attach_ts_as, epoch_seconds(F.col("_rts")))
-            .drop("_rts")
-        )
-        u = l_tag.unionByName(r_tag, allowMissingColumns=True)
-
-        # tie-break equal-ts right rows deterministically by their values
-        # (matches the struct-max convention of the salted path)
-        w = (
-            Window.partitionBy(key)
-            .orderBy("_ets", "_k", F.struct(*[F.col(c) for c in value_cols]))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        filled = u.select(
-            "*",
-            *[
-                F.last(c, ignorenulls=True).over(w).alias(f"_f_{c}")
-                for c in value_cols
-            ],
-            F.last(attach_ts_as, ignorenulls=True).over(w).alias("_f_ts"),
-        )
-        return filled.filter(F.col("_k") == lk).select(
-            *[c for c in left.columns],
-            *[F.col(f"_f_{c}").alias(c) for c in value_cols],
-            F.col("_f_ts").alias(attach_ts_as),
-        )
-
-    l_tag = (
-        left.withColumn("_k", F.lit(lk))
-        .withColumn("_ets", epoch_seconds(left_ts))
+    value_cols = _value_cols(left, right, key, right_ts, value_cols)
+    return _asof_core(
+        left.withColumn("_ets", epoch_seconds(left_ts)),
+        _right_rows(right, key, right_ts, value_cols),
+        key, left.columns, value_cols, strict, attach_ts_as,
     )
-    r_tag = right.select(
-        key,
-        epoch_seconds(F.col(right_ts)).alias("_ets"),
-        F.lit(rk).alias("_k"),
-        epoch_seconds(F.col(right_ts)).alias("_ats"),
-        *[F.col(c) for c in value_cols],
-    )
-    r_states = _right_fill_states(r_tag, key, value_cols)
-    u = l_tag.unionByName(r_states, allowMissingColumns=True)
-
-    w = (
-        Window.partitionBy(key)
-        .orderBy("_ets", "_k")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = u.select(
-        "*", F.last("_state", ignorenulls=True).over(w).alias("_f")
-    )
-    left_only = filled.filter(F.col("_k") == lk)
-    out = left_only.select(
-        *[c for c in left.columns],
-        *[F.col(f"_f.{c}").alias(c) for c in value_cols],
-        F.col("_f._ts").alias(attach_ts_as),
-    )
-    return out
 
 
 def asof_join_salted(
@@ -227,183 +203,44 @@ def asof_join_salted(
     attach_ts_as: str = "asof_ts",
     block_seconds: float = 3600.0,
     hot_threshold: int = 100_000,
-    fold_states: bool | None = None,
 ) -> DataFrame:
-    """Skew-resistant as-of join: hot conversations are windowed per
-    (conv_id, time-block) with precomputed carry-in state; the cold long
-    tail takes the direct single-window path.
+    """Skew-resistant as-of join, same output as ``asof_join``.
 
-    The carry-in pass works on *block-level* rows (<= rows/block_seconds
-    per conv), so its window partition is tiny even for a 10^8-turn
-    conversation; the per-block windows are bounded by block occupancy.
-
-    ``fold_states``: physical-form selector, see ``asof_join`` — the
-    same per-column vs folded-state choice applied to both the cold
-    path and the per-(conv, block) hot windows.
+    Keys with more than ``hot_threshold`` left rows are hot. Their rows
+    get block id ``_blk = floor(_ets / block_seconds)``; every other key
+    gets ``_blk = 0``. Each hot left block also gets one carry-in row
+    holding the state of the latest right row in an earlier block, and
+    ``_asof_core`` then windows per (key, _blk), so no window partition
+    outgrows one block of a hot conversation. Blocks rise with ``_ets``,
+    so a right row in an earlier block is strictly earlier than every
+    left row of a later block: the carry-in never leaks.
     """
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (key, right_ts)
-    ]
-    if fold_states is None:
-        fold_states = len(value_cols) >= _FOLD_MIN_COLS
-
+    value_cols = _value_cols(left, right, key, right_ts, value_cols)
     counts = left.groupBy(key).agg(F.count("*").alias("_n"))
     hot_keys = counts.filter(F.col("_n") > hot_threshold).select(key)
     # cheap eager probe (column-pruned scan + partial agg): when nothing
-    # is hot — the common case — skip the split entirely instead of
-    # paying the anti/semi double-scan of the wide left side (measured
-    # 2x overhead on 13M rows with zero hot keys).
+    # is hot, the common case, skip the block split and its extra joins
     if hot_keys.limit(1).count() == 0:
         return asof_join(
-            left, right, key, left_ts, right_ts, value_cols, strict,
-            attach_ts_as, fold_states=fold_states,
+            left, right, key, left_ts, right_ts, value_cols, strict, attach_ts_as
         )
-    # hot set is by construction small (few convs can exceed the threshold);
-    # broadcast it so the hot/cold split is a map-side semi/anti join.
-    hot_b = F.broadcast(hot_keys)
+    # the hot set is small by construction (few keys can exceed the
+    # threshold): broadcast it so tagging is a map-side join
+    hot = F.broadcast(hot_keys.withColumn("_hot", F.lit(True)))
 
-    cold_left = left.join(hot_b, key, "left_anti")
-    cold_right = right.join(hot_b, key, "left_anti")
-    cold_out = asof_join(
-        cold_left, cold_right, key, left_ts, right_ts, value_cols, strict,
-        attach_ts_as, fold_states=fold_states,
-    )
-
-    hot_left = left.join(hot_b, key, "left_semi")
-    hot_right = right.join(hot_b, key, "left_semi")
-
-    blk = lambda ts: F.floor(epoch_seconds(ts) / F.lit(block_seconds))  # noqa: E731
-
-    # 1. per-(conv, block) final snapshot state from right rows
-    r = hot_right.withColumn("_blk", blk(right_ts)).withColumn(
-        "_rts", epoch_seconds(right_ts)
-    )
-    ordkey = F.struct(
-        F.col("_rts").alias("t"), *[F.col(c).alias(c) for c in value_cols]
-    )
-    per_block = r.groupBy(key, "_blk").agg(F.max(ordkey).alias("_fin"))
-
-    # 2. carry-in per block (tiny window: one row per occupied block per
-    #    hot conv). Carry state must reach every left block — including
-    #    blocks with no right rows at all — so it is attached with a
-    #    block-level as-of: the cumulative final state of the latest
-    #    right-block strictly before each left block.
-    cum = (
-        Window.partitionBy(key)
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    block_state = per_block.select(
-        key, "_blk", F.last("_fin", ignorenulls=True).over(cum).alias("_state")
-    )
-
-    left_blocks = hot_left.withColumn("_blk", blk(left_ts)).select(key, "_blk").distinct()
-    # latest right-block strictly before each left block -> carry-in
-    lb = left_blocks.withColumn("_k", F.lit(0))
-    rb = block_state.withColumn("_k", F.lit(1))
-    ub = lb.unionByName(rb, allowMissingColumns=True)
-    wub = (
-        Window.partitionBy(key)
-        .orderBy("_blk", "_k")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry_in = (
-        ub.select(
-            key, "_blk", "_k", F.last("_state", ignorenulls=True).over(wub).alias("_carry")
+    def blocked(df: DataFrame) -> DataFrame:
+        blk = F.floor(F.col("_ets") / F.lit(float(block_seconds)))
+        return df.join(hot, key, "left").withColumn(
+            "_blk", F.when(F.col("_hot"), blk).otherwise(F.lit(0))
         )
-        .filter((F.col("_k") == 0) & F.col("_carry").isNotNull())
-        .select(key, "_blk", "_carry")
-    )
 
-    # 3. per-(conv, block) as-of. Folded form (r8): fold [carry-in
-    #    pseudo snapshot, in-block snapshots] into per-row fill states
-    #    (tiny frames), then union with left rows and run ONE running
-    #    last(_state) per (conv, block) — same shape as the direct
-    #    path's folded form: the big exchange carries one nullable
-    #    struct slot instead of |value_cols| null slots per left row,
-    #    and the big sort key is (_ets, _k) without the value-struct
-    #    comparator. Per-column form: the classic union window with one
-    #    running last per value column.
-    lk, rk = (0, 1) if strict else (1, 0)
-    l_tag = (
-        hot_left.withColumn("_blk", blk(left_ts))
-        .withColumn("_k", F.lit(lk))
-        .withColumn("_ets", epoch_seconds(left_ts))
+    lb = blocked(left.withColumn("_ets", epoch_seconds(left_ts)))
+    carry = lb.filter(F.col("_hot")).select(key, "_blk").distinct()
+    return _asof_core(
+        lb.drop("_hot"),
+        blocked(_right_rows(right, key, right_ts, value_cols)).drop("_hot"),
+        key, left.columns, value_cols, strict, attach_ts_as, carry,
     )
-    if not fold_states:
-        l_tag = l_tag.withColumn(attach_ts_as, F.lit(None).cast("double"))
-        r_tag = (
-            r.withColumn("_k", F.lit(rk))
-            .withColumn("_ets", F.col("_rts"))
-            .withColumn(attach_ts_as, F.col("_rts"))
-            .drop("_rts")
-            .drop(right_ts)
-        )
-        c_tag = carry_in.select(
-            key,
-            "_blk",
-            F.lit(-1).alias("_k"),  # carry-in sorts before everything
-            (F.col("_blk") * F.lit(block_seconds)).alias("_ets"),
-            F.col("_carry.t").alias(attach_ts_as),
-            *[F.col(f"_carry.{c}").alias(c) for c in value_cols],
-        )
-        u = l_tag.unionByName(r_tag, allowMissingColumns=True).unionByName(
-            c_tag, allowMissingColumns=True
-        )
-        w = (
-            Window.partitionBy(key, "_blk")
-            .orderBy("_ets", "_k", F.struct(*[F.col(c) for c in value_cols]))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        filled = u.select(
-            "*",
-            *[
-                F.last(c, ignorenulls=True).over(w).alias(f"_f_{c}")
-                for c in value_cols
-            ],
-            F.last(attach_ts_as, ignorenulls=True).over(w).alias("_f_ts"),
-        )
-        hot_out = filled.filter(F.col("_k") == lk).select(
-            *[c for c in left.columns],
-            *[F.col(f"_f_{c}").alias(c) for c in value_cols],
-            F.col("_f_ts").alias(attach_ts_as),
-        )
-        return cold_out.unionByName(hot_out)
-
-    r_tag = r.select(
-        key,
-        "_blk",
-        F.col("_rts").alias("_ets"),
-        F.lit(rk).alias("_k"),
-        F.col("_rts").alias("_ats"),
-        *[F.col(c) for c in value_cols],
-    )
-    c_tag = carry_in.select(
-        key,
-        "_blk",
-        (F.col("_blk") * F.lit(block_seconds)).alias("_ets"),
-        F.lit(-1).alias("_k"),  # carry-in sorts before everything in the block
-        F.col("_carry.t").alias("_ats"),
-        *[F.col(f"_carry.{c}").alias(c) for c in value_cols],
-    )
-    states = _right_fill_states(
-        c_tag.unionByName(r_tag), key, value_cols, extra_part_cols=["_blk"]
-    )
-    u = l_tag.unionByName(states, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(key, "_blk")
-        .orderBy("_ets", "_k")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = u.select(
-        "*", F.last("_state", ignorenulls=True).over(w).alias("_f")
-    )
-    hot_out = filled.filter(F.col("_k") == lk).select(
-        *[c for c in left.columns],
-        *[F.col(f"_f.{c}").alias(c) for c in value_cols],
-        F.col("_f._ts").alias(attach_ts_as),
-    )
-    return cold_out.unionByName(hot_out)
 
 
 def tolerance_gate(

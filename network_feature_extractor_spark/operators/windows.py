@@ -1,21 +1,20 @@
 """Ordered per-conversation window features (SURVEY.md §2.4 W1/W2/W12/W13, A6).
 
-Reference semantics re-expressed declaratively:
+The inter-arrival times (W1), rolling text-length aggregates (W12) and
+forward fill (W13) live in the fused ``plans/pipeline.py:
+per_turn_features``. This module holds the window features it does not
+compute:
 
-- W1  inter-arrival time: ``ts - lag(ts)`` per conv (flow IAT,
-  reference state ``src/core/flow_tracker.py:452-471``) and per
-  (conv, role) (the fwd/bwd per-direction IAT analog).
-- W12 rolling text-length aggregates over a k-row trailing frame
-  (north-rule requirement; population std).
-- W13 forward/backward fill: ``last(col, ignorenulls=True)`` over an
-  unbounded-preceding frame (the reference carries last-known values in
+- W1  ``with_lead_gap``: seconds until the next turn.
+- W13 backward fill: ``first(col, ignorenulls=True)`` over an
+  unbounded-following frame (the reference carries last-known values in
   mutable flow state, ``src/core/flow_tracker.py:431,458,464``).
 - A6  first value per (conv, role): ``first seen`` init-window analog
   (``src/core/flow_tracker.py:233-235``).
+- ``with_future_labels``: forward-looking supervised labels.
 
-All of these share one (partitionBy conv_id, orderBy ts, turn_idx) sort —
-Catalyst reuses the exchange+sort across the window specs, so the whole
-block is a single shuffle at any scale.
+The per-conversation windows share one (partitionBy conv_id, orderBy ts,
+turn_idx) sort, so Catalyst reuses one exchange+sort across them.
 """
 
 from __future__ import annotations
@@ -28,62 +27,14 @@ from ..functions.stats import epoch_seconds
 ORDER = ["ts", "turn_idx"]  # stable tie-break (FIXTURES.md §1)
 
 
-def _w(key: str | list[str]):
-    keys = [key] if isinstance(key, str) else key
-    return Window.partitionBy(*keys).orderBy(*ORDER)
-
-
-def with_iat(df: DataFrame, key: str = "conv_id", out: str = "iat") -> DataFrame:
-    """Flow-level inter-arrival seconds; 0.0 for the first turn (the
-    reference seeds last_timestamp with the first packet's ts)."""
-    prev = F.lag(epoch_seconds("ts")).over(_w(key))
-    return df.withColumn(
-        out, F.coalesce(epoch_seconds("ts") - prev, F.lit(0.0))
-    )
-
-
-def with_role_iat(
-    df: DataFrame, key: str = "conv_id", role_col: str = "role", out: str = "iat_role"
-) -> DataFrame:
-    """Per-direction IAT analog: gap to the previous turn *of the same role*."""
-    prev = F.lag(epoch_seconds("ts")).over(_w([key, role_col]))
-    return df.withColumn(
-        out, F.coalesce(epoch_seconds("ts") - prev, F.lit(0.0))
-    )
+def _w(key: str):
+    return Window.partitionBy(key).orderBy(*ORDER)
 
 
 def with_lead_gap(df: DataFrame, key: str = "conv_id", out: str = "gap_next") -> DataFrame:
     """Seconds until the next turn (lead); null on the last turn."""
     nxt = F.lead(epoch_seconds("ts")).over(_w(key))
     return df.withColumn(out, nxt - epoch_seconds("ts"))
-
-
-def with_rolling_text_len(
-    df: DataFrame, k: int = 5, key: str = "conv_id", text_col: str = "text"
-) -> DataFrame:
-    """Trailing k-row rolling aggregates of length(text): mean/std/min/max.
-
-    std is population (moments form) for reference parity. Frame is
-    rows [-k+1, 0] — the current turn and the k-1 before it.
-    """
-    frame = _w(key).rowsBetween(-(k - 1), 0)
-    ln = F.length(F.col(text_col)).cast("double")
-    m1 = F.avg(ln).over(frame)
-    m2 = F.avg(ln * ln).over(frame)
-    return (
-        df.withColumn("rt_len_mean", m1)
-        .withColumn("rt_len_std", F.sqrt(F.greatest(m2 - m1 * m1, F.lit(0.0))))
-        .withColumn("rt_len_min", F.min(ln).over(frame))
-        .withColumn("rt_len_max", F.max(ln).over(frame))
-    )
-
-
-def with_ffill(
-    df: DataFrame, col: str, out: str | None = None, key: str = "conv_id"
-) -> DataFrame:
-    """Forward-fill: latest non-null value at-or-before each row."""
-    frame = _w(key).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out or f"{col}_ffill", F.last(col, ignorenulls=True).over(frame))
 
 
 def with_bfill(

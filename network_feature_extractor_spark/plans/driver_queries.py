@@ -4074,7 +4074,7 @@ def j1c_asof_tolerance(spark, sf_dir):
     /root/reference/src/core/flow_tracker.py:642-648): a snapshot older
     than 86400 s at the turn's timestamp is expired — its value nulled,
     asof_stale raised. The gate is a pure map-side projection on the
-    join output (same single exchange as j1_asof; plan-guarded). The
+    join output (the same exchanges as j1_asof; plan-guarded). The
     staleness compare runs on micros/1e6 epoch doubles — exact-rounded
     subtraction, bit-identical both engines, NO rounding guard."""
     e = _events(spark, sf_dir)

@@ -1,11 +1,10 @@
 """Per-partition lineage + metrics (SURVEY.md §2.10).
 
 The reference exposes Prometheus counters/gauges from each thread
-(``src/monitoring/prometheus_exporter.py``). The Spark-native reshape:
-(a) cheap whole-job counters via SparkContext accumulators incremented
-at Arrow-batch granularity (not per row), and (b) a *metrics DataFrame*
-— one row per input partition with row counts and value extents —
-written alongside the output as a queryable lineage table.
+(``src/monitoring/prometheus_exporter.py``). The Spark-native reshape
+is a *metrics DataFrame* — one row per input partition with row counts
+and value extents — written alongside the output as a queryable lineage
+table, plus a cumulative histogram of a metric column.
 """
 
 from __future__ import annotations
@@ -100,24 +99,3 @@ def duration_histogram(
     )
     return g.select(F.explode(rows).alias("_r")).select("_r.le", "_r.cumulative")
 
-
-class JobCounters:
-    """Accumulator bundle — the Prometheus-counter analog."""
-
-    def __init__(self, sc):
-        self.rows_in = sc.accumulator(0)
-        self.rows_out = sc.accumulator(0)
-        self.batches = sc.accumulator(0)
-
-    def count_batches(self, df: DataFrame) -> DataFrame:
-        """Pass-through transform that increments counters per Arrow batch."""
-        rows_in, batches = self.rows_in, self.batches
-        schema = df.schema
-
-        def track(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows_in.add(len(pdf))
-                batches.add(1)
-                yield pdf
-
-        return df.mapInPandas(track, schema=schema)

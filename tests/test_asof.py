@@ -36,35 +36,85 @@ def test_asof_inclusive_matches_bruteforce_oracle(spark, turns, snapshots, turns
     _cmp(got, exp, ["f_a", "f_b"])
 
 
-def test_folded_equals_percol(spark, turns, snapshots):
-    """The r8 folded-state physical form must return the same rows as
-    the classic per-column union window — both strict modes, and on the
-    salted path; null-bearing value columns exercise the per-column
-    fill semantics (a null field in a later snapshot must NOT erase an
-    earlier non-null fill)."""
-    snaps_nulls = snapshots.withColumn(
-        "f_a", F.when(F.col("f_b") % 3 < 1, F.col("f_a"))
-    )
-    for strict in (True, False):
-        percol = asof_join(
-            turns, snaps_nulls, value_cols=["f_a", "f_b"], strict=strict,
-            fold_states=False,
-        ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-        folded = asof_join(
-            turns, snaps_nulls, value_cols=["f_a", "f_b"], strict=strict,
-            fold_states=True,
-        ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-        _cmp(folded, percol, ["f_a", "f_b", "asof_ts"])
+def test_null_field_keeps_earlier_fill_micro(spark):
+    """Hand-computed per-column fill: a later snapshot with a null field
+    must not erase an earlier non-null value. ``asof_oracle`` takes the
+    last snapshot whole, so this rule needs its own case. Both entry
+    points, both strict modes; the salted call makes the conversation
+    hot with 12 s blocks, so turns at 30 s and 40 s (blocks 2 and 3, no
+    snapshot of their own) read the per-column fill through the carry-in
+    row alone."""
+    from datetime import datetime, timedelta
 
-    salted_percol = asof_join_salted(
-        turns, snapshots, value_cols=["f_a", "f_b"], hot_threshold=10,
-        block_seconds=60.0, fold_states=False,
-    ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-    salted_folded = asof_join_salted(
-        turns, snapshots, value_cols=["f_a", "f_b"], hot_threshold=10,
-        block_seconds=60.0, fold_states=True,
-    ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-    _cmp(salted_folded, salted_percol, ["f_a", "f_b", "asof_ts"])
+    from network_feature_extractor_spark.datagen import TURNS_SCHEMA
+
+    t0 = datetime(2024, 1, 1, 12, 0, 0)
+    at = lambda s: t0 + timedelta(seconds=s)  # noqa: E731
+    turns = spark.createDataFrame(
+        [("c", i, "user", "x", None, at(10 * i)) for i in range(5)],
+        schema=TURNS_SCHEMA,
+    )
+    snaps = spark.createDataFrame(
+        [("c", at(5), 1.0, 10.0), ("c", at(15), None, 20.0), ("c", at(20), 3.0, None)],
+        schema="conv_id string, snap_ts timestamp, f_a double, f_b double",
+    )
+    base = turns.filter("turn_idx = 0").select(F.col("ts").cast("double")).first()[0]
+    nan = float("nan")
+    # (f_a, f_b, asof_ts - t0) per turn at 0, 10, 20, 30, 40 s
+    strict_exp = [(nan, nan, nan), (1, 10, 5), (1, 20, 15), (3, 20, 20), (3, 20, 20)]
+    incl_exp = [(nan, nan, nan), (1, 10, 5), (3, 20, 20), (3, 20, 20), (3, 20, 20)]
+    for strict, exp in ((True, strict_exp), (False, incl_exp)):
+        direct = asof_join(turns, snaps, value_cols=["f_a", "f_b"], strict=strict)
+        salted = asof_join_salted(
+            turns, snaps, value_cols=["f_a", "f_b"], strict=strict,
+            hot_threshold=2, block_seconds=12.0,
+        )
+        for out in (direct, salted):
+            got = out.orderBy("turn_idx").toPandas()
+            got["asof_ts"] = got["asof_ts"] - base
+            want = pd.DataFrame(exp, columns=["f_a", "f_b", "asof_ts"])
+            for c in want.columns:
+                g = got[c].astype(float).to_numpy()
+                assert np.allclose(g, want[c].to_numpy(), equal_nan=True), (strict, c, g)
+
+
+def test_salted_wide_lineage_equals_direct(spark):
+    """Hot-key salting over 32 value columns that all derive from one
+    input column must plan in bounded time and match the direct path.
+    The carry-in must stay one struct: rebuilding each column from it
+    and unioning the columns back makes the optimizer's time grow
+    steeply with the column count when the columns share lineage."""
+    from datetime import datetime, timedelta
+
+    from network_feature_extractor_spark.datagen import TURNS_SCHEMA
+
+    rng = np.random.default_rng(7)
+    t0 = datetime(2024, 1, 1, 12, 0, 0)
+    turn_rows, snap_rows = [], []
+    for c in range(3):
+        conv = f"c{c}"
+        offs = np.cumsum(rng.integers(1, 20, 40))
+        for i, o in enumerate(offs):
+            turn_rows.append((conv, i, "user", "x", None, t0 + timedelta(seconds=int(o))))
+        # half the snapshots land exactly on a turn's ts (the strict tie)
+        snap_offs = np.concatenate(
+            [rng.choice(offs, 8, replace=False), rng.integers(0, int(offs[-1]) + 30, 7)]
+        )
+        for o in snap_offs:
+            snap_rows.append((conv, t0 + timedelta(seconds=int(o)), float(rng.normal())))
+    turns = spark.createDataFrame(turn_rows, schema=TURNS_SCHEMA)
+    snaps = spark.createDataFrame(snap_rows, "conv_id string, snap_ts timestamp, v double")
+    cols = [f"v{i}" for i in range(32)]
+    wide = snaps.select(
+        "conv_id", "snap_ts", *[(F.col("v") + i).alias(c) for i, c in enumerate(cols)]
+    )
+    out = ["conv_id", "turn_idx", *cols, "asof_ts"]
+    direct = asof_join(turns, wide, value_cols=cols).select(*out).toPandas()
+    salted = asof_join_salted(
+        turns, wide, value_cols=cols, hot_threshold=2, block_seconds=60.0
+    ).select(*out).toPandas()
+    assert direct["v0"].notna().any() and direct["v0"].isna().any()
+    _cmp(salted, direct, [*cols, "asof_ts"])
 
 
 def test_salted_equals_direct(spark, turns, snapshots):

@@ -2,6 +2,7 @@ import json
 import os
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from network_feature_extractor_spark.config import EngineConfig
@@ -26,6 +27,23 @@ def test_pipeline_end_to_end(spark, turns):
     # first session of each conv has no preceding closed session -> null attach
     first = enriched.filter(F.col("session_id") == 0)
     assert first.filter(F.col("prev_n_turns").isNotNull()).count() == 0
+
+
+def test_pipeline_salted_asof_bit_identical(spark, turns):
+    """With the as-of salting threshold below the largest conversations,
+    the pipeline's attach runs the hot-block path; every output column
+    must equal the direct path's bit for bit. 600 s blocks split each
+    hot conversation across several blocks, so carry-in rows are used."""
+    n_hot = turns.groupBy("conv_id").count().filter(F.col("count") > 20).count()
+    assert n_hot > 0  # the hot-block path is really taken
+    keys = ["conv_id", "turn_idx"]
+    direct, _ = run_pipeline(turns)
+    salted, _ = run_pipeline(
+        turns, EngineConfig(asof_hot_threshold=20, asof_block_seconds=600.0)
+    )
+    d = direct.toPandas().sort_values(keys).reset_index(drop=True)
+    s = salted.select(*direct.columns).toPandas().sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(s, d, check_exact=True)
 
 
 def test_pipeline_snapshot_consistency(spark, turns):
@@ -87,14 +105,6 @@ def test_partition_metrics(spark, turns):
     assert pm["rows"].sum() == turns.count()
     assert (pm["rows"] > 0).all()
     assert (pm["max_ts"] >= pm["min_ts"]).all()
-
-
-def test_job_counters(spark, turns):
-    c = lineage.JobCounters(spark.sparkContext)
-    tracked = c.count_batches(turns.select("conv_id", "turn_idx", "ts"))
-    n = tracked.count()
-    assert c.rows_in.value == n
-    assert c.batches.value > 0
 
 
 def test_pipeline_zero_leakage_future_text_perturbation(spark, turns):

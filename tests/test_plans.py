@@ -336,27 +336,18 @@ def test_tfidf_docfreq_join_two_forms(spark):
 
 def test_tolerance_gate_adds_no_exchange(spark, turns, snapshots):
     """The TTL gate must stay a map-side projection: the gated as-of
-    plan carries exactly the join's own exchange count. Narrow attaches
-    (< _FOLD_MIN_COLS) keep the classic single-exchange per-column
-    union window; the folded r8 form adds exactly one SMALL right-side
-    exchange and its big window runs ONE last(_state) instead of one
-    running last per value column."""
+    plan carries exactly the join's own exchange count. The as-of join
+    is one small right-side fold exchange plus the big union window's,
+    and the union window runs ONE last(_state) for all value columns."""
     from network_feature_extractor_spark.operators.asof import asof_join, tolerance_gate
 
     raw = asof_join(turns, snapshots, value_cols=["f_a", "f_b"])
     gated = tolerance_gate(raw, value_cols=["f_a", "f_b"], tolerance_s=60.0)
     raw_plan, gated_plan = _plan(raw), _plan(gated)
-    assert raw_plan.count("Exchange") == 1, raw_plan.count("Exchange")
+    assert raw_plan.count("Exchange") == 2, raw_plan.count("Exchange")
     assert gated_plan.count("Exchange") == raw_plan.count("Exchange")
-
-    folded = asof_join(
-        turns, snapshots, value_cols=["f_a", "f_b"], fold_states=True
-    )
-    fplan = _plan(folded)
-    assert fplan.count("Exchange") == 2, fplan.count("Exchange")
-    # the union-side window carries a single running last over the state
-    # struct — per-column lasts live in the small right-side fold only
-    assert fplan.count("last(_state") == 1, fplan
+    # per-column lasts live in the small right-side fold only
+    assert raw_plan.count("last(_state") == 1, raw_plan
 
 
 def test_future_labels_single_exchange(spark, turns):

@@ -1,8 +1,9 @@
 import numpy as np
 import pandas as pd
 
+from network_feature_extractor_spark.config import EngineConfig
 from network_feature_extractor_spark.operators import windows
-from network_feature_extractor_spark.operators.sessionize import with_session_id
+from network_feature_extractor_spark.plans.pipeline import per_turn_features
 
 from oracle_pandas import per_turn_oracle
 
@@ -12,11 +13,10 @@ def _sorted(pdf):
 
 
 def test_iat_and_session_match_pandas_oracle(spark, turns, turns_pd):
-    d = with_session_id(turns)
-    d = windows.with_iat(d)
-    d = windows.with_role_iat(d)
     got = _sorted(
-        d.select("conv_id", "turn_idx", "iat", "iat_role", "session_id").toPandas()
+        per_turn_features(turns)
+        .select("conv_id", "turn_idx", "iat", "iat_role", "session_id")
+        .toPandas()
     )
     exp = _sorted(per_turn_oracle(turns_pd))
     assert np.allclose(got["iat"], exp["iat"], rtol=1e-9, atol=1e-6)
@@ -26,20 +26,18 @@ def test_iat_and_session_match_pandas_oracle(spark, turns, turns_pd):
 
 def test_rolling_text_len_matches_pandas(spark, turns, turns_pd):
     got = _sorted(
-        windows.with_rolling_text_len(turns, k=5)
+        per_turn_features(turns, EngineConfig(rolling_k=5))
         .select("conv_id", "turn_idx", "rt_len_mean", "rt_len_std", "rt_len_min", "rt_len_max")
         .toPandas()
     )
-    exp = _sorted(per_turn_oracle(turns_pd))
+    exp = _sorted(per_turn_oracle(turns_pd, k=5))
     for c in ["rt_len_mean", "rt_len_std", "rt_len_min", "rt_len_max"]:
         assert np.allclose(got[c], exp[c], rtol=1e-9, atol=1e-9), c
 
 
 def test_ffill_matches_pandas(spark, turns, turns_pd):
     got = _sorted(
-        windows.with_ffill(turns, "tool", out="last_tool")
-        .select("conv_id", "turn_idx", "last_tool")
-        .toPandas()
+        per_turn_features(turns).select("conv_id", "turn_idx", "last_tool").toPandas()
     )
     exp = _sorted(per_turn_oracle(turns_pd))
     ge = got["last_tool"].fillna("<na>")
