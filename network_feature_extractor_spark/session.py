@@ -11,6 +11,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MB = 64 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of physical memory (``MemTotal``), capped at 64g; 64g when
+    ``meminfo`` cannot be read. A fixed 64g heap on a 15 GB host let the
+    local-mode JVM grow until the kernel's OOM killer ended it."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kb = int(line.split()[1])
+                    return f"{min(kb // 2048, _MAX_DRIVER_MB)}m"
+    except OSError:
+        pass
+    return f"{_MAX_DRIVER_MB}m"
+
 
 def get_spark(
     app_name: str = "transcript-features",
@@ -49,8 +66,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode = driver-only: size the heap for the task count
         # (32 concurrent window/shuffle buffers starve an 8g heap and
-        # serialize on GC — measured 2.6x slowdown at 32 cores)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        # serialize on GC — measured 2.6x slowdown at 32 cores), but
+        # never past what the host can back
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # local-mode shuffle goes through the local filesystem; a
         # RAM-backed dir removes disk-flush noise (cluster mode would
         # use real executors + external shuffle service instead)

@@ -300,3 +300,14 @@ def test_asof_ttl_from_yaml(tmp_path):
     p2 = tmp_path / "c2.yaml"
     p2.write_text("engine:\n  rolling_k: 3\n")
     assert load_config(str(p2)).asof_ttl_s is None  # default: gate off
+
+
+def test_default_driver_memory_from_meminfo(tmp_path):
+    from network_feature_extractor_spark.session import default_driver_memory
+
+    p = tmp_path / "meminfo"
+    p.write_text("MemTotal:       15728640 kB\nMemFree:        1000 kB\n")
+    assert default_driver_memory(str(p)) == "7680m"  # half of 15 GiB
+    p.write_text("MemTotal:       536870912 kB\n")  # 512 GiB host -> the 64g cap
+    assert default_driver_memory(str(p)) == "65536m"
+    assert default_driver_memory(str(tmp_path / "missing")) == "65536m"

@@ -1,8 +1,11 @@
 import json
 import os
+import sys
+import threading
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from network_feature_extractor_spark.config import EngineConfig
@@ -71,9 +74,11 @@ def test_checkpoint_resume(spark, turns, tmp_path):
     out = str(tmp_path / "features")
 
     calls = {"n": 0}
+    lock = threading.Lock()
 
     def build(df):
-        calls["n"] += 1
+        with lock:
+            calls["n"] += 1
         return per_turn_features(df).drop("text", "tool")
 
     m1 = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
@@ -181,32 +186,48 @@ def test_jobs_entrypoint_end_to_end(spark, tmp_path):
     assert all(v["status"] == "done" for v in manifest.values())
 
 
+def _entries(manifest: dict) -> dict:
+    """Manifest entries without their wall seconds."""
+    return {b: {k: v for k, v in e.items() if k != "seconds"} for b, e in manifest.items()}
+
+
 def test_checkpoint_survives_crash_mid_run(spark, turns, tmp_path):
-    """Simulated failure: the build fn raises on one bucket; previously
-    completed buckets persist in the manifest and are not re-processed on
-    the retry run."""
+    """Simulated failure: the build fn raises on the bucket whose content
+    is bucket 2 (not on the n-th call: buckets run concurrently, so call
+    order is not fixed). Buckets that completed persist in the manifest
+    with the same entries as a clean run, and the retry builds each
+    missing bucket exactly once."""
+    clean = _entries(
+        checkpoint.run_resumable(
+            turns, str(tmp_path / "clean"), lambda df: per_turn_features(df).drop("text", "tool"),
+            n_buckets=4, checksum_col="conv_id",
+        )
+    )
     out = str(tmp_path / "crashy")
-    calls = {"n": 0, "fail_armed": True}
+    built: list[int] = []
+    lock = threading.Lock()
+    crash = {"bucket": 2}
 
     def build(df):
-        calls["n"] += 1
-        if calls["n"] == 3 and calls["fail_armed"]:
-            calls["fail_armed"] = False
+        b = df.select(checkpoint.bucket_col("conv_id", 4).alias("b")).first()["b"]
+        with lock:
+            built.append(b)
+        if b == crash["bucket"]:
             raise RuntimeError("injected crash")
         return per_turn_features(df).drop("text", "tool")
 
-    import pytest as _pytest
+    with pytest.raises(RuntimeError, match="injected crash"):
+        checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
+    m = _entries(json.load(open(os.path.join(out, "_manifest.json"))))
+    assert m.get("2", {}).get("status") != "done"
+    done = {k: v for k, v in m.items() if v["status"] == "done"}
+    assert all(v == clean[k] for k, v in done.items())
 
-    with _pytest.raises(RuntimeError):
-        checkpoint.run_resumable(turns, out, build, n_buckets=4)
-    m = json.load(open(os.path.join(out, "_manifest.json")))
-    assert sum(1 for v in m.values() if v["status"] == "done") == 2
-
-    n_before = calls["n"]
-    m2 = checkpoint.run_resumable(turns, out, build, n_buckets=4)
-    # retry processes only the 2 remaining buckets
-    assert calls["n"] == n_before + 2
-    assert sum(v["rows"] for v in m2.values()) == turns.count()
+    built.clear()
+    crash["bucket"] = None
+    m2 = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
+    assert sorted(built) == sorted(int(k) for k in clean if k not in done)
+    assert _entries(m2) == clean
 
 
 def test_per_turn_text_equality_invariant(spark, turns):
@@ -253,24 +274,71 @@ def test_duration_histogram_cumulative(spark):
     assert list(h.sort_index().values) == sorted(h.values)
 
 
-def test_run_resumable_concurrent_matches_serial(spark, turns, tmp_path):
-    from network_feature_extractor_spark.plans import checkpoint
+def _content(df) -> tuple[int, int]:
+    """Order-insensitive (rows, sum of row hashes over every column)."""
+    h = F.xxhash64(*[F.col(c) for c in sorted(df.columns)]).cast("decimal(38,0)")
+    row = df.agg(F.count("*").alias("n"), F.sum(h).alias("h")).first()
+    return row["n"], row["h"]
 
-    def build(subset):
-        return subset.selectExpr("conv_id", "turn_idx", "length(text) as L")
 
-    out1 = str(tmp_path / "serial")
-    out2 = str(tmp_path / "conc")
-    m1 = checkpoint.run_resumable(turns, out1, build, n_buckets=4, checksum_col="conv_id")
-    m2 = checkpoint.run_resumable(
-        turns, out2, build, n_buckets=4, checksum_col="conv_id", concurrency=4
-    )
-    assert {k: (v["rows"], v["checksum"]) for k, v in m1.items()} == {
-        k: (v["rows"], v["checksum"]) for k, v in m2.items()
-    }
-    a = spark.read.parquet(out1 + "/bucket=*").count()
-    b = spark.read.parquet(out2 + "/bucket=*").count()
-    assert a == b == turns.count()
+def test_run_resumable_union_matches_whole_build(spark, turns, tmp_path):
+    """The union of the concurrently built buckets equals ``build`` over
+    the whole input, row for row and value for value."""
+
+    def build(df):
+        return per_turn_features(df).drop("text", "tool")
+
+    out = str(tmp_path / "features")
+    m = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
+    assert sorted(m) == ["0", "1", "2", "3"]
+    union = spark.read.parquet(out).drop("bucket")
+    whole = build(turns)
+    assert sorted(union.columns) == sorted(whole.columns)
+    n, h = _content(union)
+    assert (n, h) == _content(whole)
+    assert n == turns.count() == sum(v["rows"] for v in m.values())
+
+
+def test_run_resumable_buckets_overlap(spark, turns, tmp_path):
+    """Two buckets' builds are in flight at once: each waits on a
+    2-party barrier, which only a concurrent run can pass."""
+    barrier = threading.Barrier(2, timeout=60)
+
+    def build(df):
+        barrier.wait()
+        return df.select("conv_id", "turn_idx")
+
+    m = checkpoint.run_resumable(turns, str(tmp_path / "overlap"), build, n_buckets=2)
+    assert sum(v["rows"] for v in m.values()) == turns.count()
+
+
+def test_run_resumable_keeps_caller_job_group(spark, turns, tmp_path):
+    """Every bucket thread runs under the caller's Spark job group, and
+    with threads switching as often as the interpreter allows, the
+    on-disk manifest still records every bucket (no lost update)."""
+    sc = spark.sparkContext
+    seen: list[str | None] = []
+    lock = threading.Lock()
+
+    def build(df):
+        with lock:
+            seen.append(df.sparkSession.sparkContext.getLocalProperty("spark.jobGroup.id"))
+        return df.select("conv_id", "turn_idx")
+
+    out = str(tmp_path / "grouped")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    sc.setLocalProperty("spark.jobGroup.id", "ckpt-group")
+    try:
+        m = checkpoint.run_resumable(turns, out, build, n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sys.setswitchinterval(interval)
+    assert seen == ["ckpt-group"] * 8
+    assert sc.statusTracker().getJobIdsForGroup("ckpt-group")
+    on_disk = json.load(open(os.path.join(out, "_manifest.json")))
+    assert on_disk == m and sorted(int(b) for b in m) == list(range(8))
+    assert sum(v["rows"] for v in m.values()) == turns.count()
 
 
 def test_pipeline_asof_ttl(spark, turns):
